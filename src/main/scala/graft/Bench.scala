@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Parse a flat {"name":sec,...} clean-reference file. Tolerant of
     * whitespace around the colon (any standard JSON writer emits
@@ -356,67 +355,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE stays ON by default (the at-scale behavior: runtime skew
-      // split / partition coalescing); the env knob exists to measure
-      // its fixed re-planning cost at micro-bench scale.
-      // Normalized to a strict boolean: a stray value like "1" would
-      // otherwise throw on first conf read and abort the timed run.
-      .config("spark.sql.adaptive.enabled",
-        String.valueOf(!Set("false", "0", "off")
-          .contains(sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toLowerCase)))
-      // Size the generated-class cache to the workload (static conf,
-      // default 100 entries): a 167-query sweep cycles far more than
-      // 100 generated classes, so by the time a query's SECOND timed
-      // pass arrives its classes are evicted and every stage pays
-      // janino recompilation again. graph_pagerank — the widest plan,
-      // ~9 jobs per run — read 2.4–2.8 s inside every full sweep vs
-      // 1.3–1.6 s isolated for two rounds straight; with the cache
-      // sized to the sweep the in-sweep number IS the isolated number
-      // (InterferenceProbe: before 1.97/1.70/1.50 s, after-166-queries
-      // 1.44/1.25/1.31 s at 5000 entries vs 2.66 s first-run-after at
-      // the default). Same knob a long-lived production session serving
-      // a wide query mix would set.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // AQE's partition-coalescing floor stays at the 1m DEFAULT — a
-      // deliberate, measured decision, not an oversight. A five-sweep
-      // A/B (r12, CoalesceFloorProbe + full-inventory runs at 1m /
-      // 256kb / 128kb / 64kb) showed lowering the floor re-parallelizes
-      // small-shuffle queries (total 35.0 -> 32.2-33.5 s) but taxes
-      // every ITERATIVE plan with per-iteration task-launch overhead
-      // (graph_pagerank 1.34 -> 1.8-2.6 s, win_islands and ev_funnel
-      // regress at 64kb) — a regression trade, not a win. The one
-      // query whose gap was structural (llm_ann_ivf_probe: pair-cost
-      // quadratic in cell size, input bytes linear, so byte-based
-      // coalescing serialized ~800 k dot products onto one core) is
-      // fixed where it belongs, in the operator (Ann.spreadByCell);
-      // the env knob re-prices the floor without a rebuild.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_FLOOR", "1m"))
-      // Shuffle scratch on the job-scoped fast tier (/dev/shm when
-      // writable — same policy, and same cleanup hook, as
-      // Tables.scratchDir): the ×100 crossover profile showed tiny
-      // shuffles dominated by DiskBlockObjectWriter file create/open/
-      // delete on disk-backed /tmp (bypass writer: numPartitions files
-      // per map task), ~3.5× the samples of the aggregation itself on
-      // ev_tumbling. A cluster deployment points local.dir at local
-      // SSD for exactly this reason; durable outputs never live here.
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        graft.Tables.scratchDir("graft_shuffle_").toString))
-      // Shuffle writer choice for the 32-partition exchanges (A/B
-      // knob; see NOTES r14): bypass writes numPartitions files per
-      // map task, sort writes one data+index pair.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESH", "200"))
-      // Same session TZ as Verify: timestamp-literal filters must
-      // select the same rows here as in the scored correctness run,
-      // or a non-UTC box would time different work.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up JIT/codegen/shuffle/parquet machinery once so the first
     // timed query doesn't absorb ~5 s of one-time JVM costs. Warmup is
@@ -504,7 +444,7 @@ object Bench {
     // DataFrame is built once per query (the warm pass pays it) and
     // each timed `.count()` constructs a fresh QueryExecution over the
     // already-analyzed plan — full job re-runs every time (fresh
-    // shuffle ids; PreparedProbe pins equal task counts), only the
+    // shuffle ids; NOTES r13, pinned by PreparedSuite), only the
     // builder + per-Dataset analysis cost is skipped. This is the
     // prepared-statement protocol a serving engine uses, and the
     // protocol DuckDB's ~1 ms planner makes BASELINE.md's warm repeats
@@ -703,48 +643,10 @@ object Bench {
     // budget can rescue individual queries, but a sustained steal
     // burst contaminates the whole sweep and the artifact used to
     // carry the burst number with no recourse. Both attempts ride the
-    // artifact ("sweep_attempts"); the env knob exists so a doctored
-    // validation run can pin the single-attempt path.
-    // JIT-settle before the first timed pass (r19 verdict #7
-    // experiment): warmPin runs every plan once, but HotSpot's C2
-    // queue drains ASYNCHRONOUSLY — the hypothesis was that the first
-    // timed pass runs against a compile backlog (NOTES r19: in-sweep
-    // pagerank 2-3 s vs 1.2-1.6 s isolated). MEASURED A/B (r20,
-    // adjacent scored-style sweeps at sf0.1): the drain found the
-    // queue ALREADY QUIET — jit_settle_s read 1.001 s, i.e. one poll
-    // interval — so there is no post-warmup backlog to drain (the
-    // calib kernels alone give C2 ~10 s of runway after warmPin);
-    // the in-sweep recompile draws must be LAZY tier-up during the
-    // sweep itself, which a pre-sweep wait cannot touch. Totals
-    // (settle-on 27.98 s/12 retimes vs off 26.01 s/3) differ by box
-    // drift, not the 1 s wait. NOT adopted: default OFF, knob +
-    // "jit_settle_s" artifact key remain for re-runs.
-    // Poll rule when enabled: CompilationMXBean cumulative compile
-    // time quiet (<50 ms progress over 1 s), capped at 60 s.
-    val jitSettleS: Double =
-      if (!Set("true", "1", "on").contains(
-          sys.env.getOrElse("SPARK_GRAFT_JIT_SETTLE", "false").toLowerCase)) -1.0
-      else {
-        val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-        if (jit == null || !jit.isCompilationTimeMonitoringSupported) -1.0
-        else {
-          val t0 = System.nanoTime()
-          var last = jit.getTotalCompilationTime
-          var quiet = false
-          while (!quiet && (System.nanoTime() - t0) < 60e9) {
-            Thread.sleep(1000)
-            val now = jit.getTotalCompilationTime
-            quiet = now - last < 50
-            last = now
-          }
-          (System.nanoTime() - t0) / 1e9
-        }
-      }
+    // artifact ("sweep_attempts").
     val attempt1 = timedSweep()
-    val retryOn = !Set("false", "0", "off").contains(
-      sys.env.getOrElse("SPARK_GRAFT_SWEEP_RETRY", "true").toLowerCase)
     val attempt2 =
-      if (attempt1.contaminated && retryOn) { awaitQuiet(); Some(timedSweep()) }
+      if (attempt1.contaminated) { awaitQuiet(); Some(timedSweep()) }
       else None
     def summ(a: Attempt) = SweepSummary(
       a.results.values.filter(_ >= 0).sum, a.contaminated, a.stealDelta,
@@ -816,8 +718,8 @@ object Bench {
     // TIMED samples measure the production AvailableNow RESTART path
     // (source listing + state-store open over committed offsets, zero
     // new data) — the full backlog is paid once in the untimed warm
-    // pass. Cold-checkpoint full-backlog times live in NOTES
-    // (StreamColdProbe). (r13: ev_tumbling_stream moved off the
+    // pass. Cold-checkpoint full-backlog cost is fixed microbatch
+    // machinery (NOTES r12). (r13: ev_tumbling_stream moved off the
     // non-durable memory sink onto a foreachBatch parquet overwrite,
     // closing the last re-streams-every-pass exception.)
     // Crossover evidence (r13 verdict #1), embedded verbatim from the
@@ -872,7 +774,9 @@ object Bench {
       s""""calib_ref":${calibRef.map(fmt3).getOrElse("null")},""" +
       s""""calib_mem_s":${fmt3(calibMem)},""" +
       s""""calib_mem_ref":${calibMemRef.map(fmt3).getOrElse("null")},""" +
-      s""""jit_settle_s":${fmt3(jitSettleS)},""" +
+      // Always -1: the pre-sweep JIT-settle wait was measured and not
+      // adopted (NOTES r20); the key stays so the artifact shape holds.
+      s""""jit_settle_s":-1.000,""" +
       s""""ref_cpus":${refCpus.getOrElse("null")},""" +
       s""""prepared_pinned":${warmPin.size},""" +
       s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +

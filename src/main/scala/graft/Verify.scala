@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +8,7 @@ object Verify {
     // Optional trailing args restrict the dump to named queries —
     // local iteration aid; the driver always passes exactly two args.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Generated-class cache sized to the 167-query inventory (see
-      // Bench.scala) — avoids janino recompilation churn mid-dump.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
+    val b0 = GraftSession.builder()
     // SPARK_GRAFT_STARVE=1: the spill-path attestation config (r17
     // verdict #2). At 100 TB every buffer spills; the ≤sf0.1 gate never
     // executes those paths, so once per round the full inventory is
@@ -67,6 +58,11 @@ object Verify {
     }
     val spark = (if (!starveOn) b0
       else Seq(
+        // Spill files stay in java.io.tmpdir, not the session's
+        // /dev/shm scratch tier: Tables.shmUsable only guarantees 4 GiB
+        // of tmpfs headroom at start-up, and the starved gate's
+        // disk-spill volume is unmeasured.
+        "spark.local.dir" -> System.getProperty("java.io.tmpdir"),
         "spark.memory.fraction" -> "0.2",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.TungstenAggregate.testFallbackStartsAt" -> s"${512 * k},${512 * k}",

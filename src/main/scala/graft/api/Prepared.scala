@@ -4,19 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Prepared-statement surface: memoize the BUILT DataFrame per
   * (session, sf, query) so repeat invocations skip the builder and its
-  * eager per-Dataset analysis — the per-invocation fixed cost
-  * ProfileSplit measured at 0.02–0.22 s on the sub-second shapes
-  * (NOTES, r12). This is the shape a serving engine uses: plan once,
-  * execute many.
+  * eager per-Dataset analysis — the per-invocation fixed cost,
+  * measured at 0.02–0.22 s on the sub-second shapes (NOTES r12).
+  * This is the shape a serving engine uses: plan once, execute many.
   *
   * What reuse does and does NOT skip: a later action on the memoized
   * Dataset (e.g. `.count()`) constructs a NEW QueryExecution over the
   * already-analyzed plan — fresh RDDs and fresh shuffle ids — so the
-  * query's jobs re-run in full every time (PreparedProbe pins equal
-  * task counts fresh-vs-memoized); only the builder + analysis work is
-  * saved. Never call actions on a QueryExecution cached across runs —
-  * same RDD lineage would let the scheduler skip completed shuffle map
-  * stages and the "timing" would measure only the result stage.
+  * query's jobs re-run in full every time (NOTES r13: equal task
+  * counts fresh-vs-memoized; PreparedSuite pins it); only the
+  * builder + analysis work is saved. Never call actions on a
+  * QueryExecution cached across runs — same RDD lineage would let the
+  * scheduler skip completed shuffle map stages and the "timing" would
+  * measure only the result stage.
   *
   * Queries whose BUILDER performs per-invocation work that is itself
   * the thing under test are never memoized: the streaming family runs

@@ -124,7 +124,7 @@ object Ann {
     * straddle Voronoi boundaries): measured at sf0.01, k=10/iters=2
     * with the hash-sampled init gives 9/14 single-probe and 14/14
     * 2-probe, the best of the k ∈ {4..10} × init sweep
-    * (tools/IvfInitProbe). Every step is bit-reproducible in BOTH
+    * (NOTES r4). Every step is bit-reproducible in BOTH
     * engines:
     *
     *  - assignment: nearest centroid by `round(cos, 6)` with ties
@@ -187,10 +187,8 @@ object Ann {
       .select(col("vec_id"), col("embedding"), col("ed"),
         col("cid").as("cell"))
 
-  /** Recompute centroids as exact quantized means of their members.
-    * private[graft] so tools/IvfInitProbe sweeps the SAME arithmetic
-    * it justifies parameters for. */
-  private[graft] def update(assigned: DataFrame): DataFrame =
+  /** Recompute centroids as exact quantized means of their members. */
+  private def update(assigned: DataFrame): DataFrame =
     assigned
       .select(col("cell"), posexplode(col("ed")).as(Seq("d", "v")))
       .groupBy(col("cell"), col("d"))
@@ -288,8 +286,8 @@ object Ann {
     * linear, so AQE's byte-based partition coalescing structurally
     * under-sizes it: at sf0.1 the 4 000 assignment rows coalesce to
     * ONE partition and ~800 k float-dot evaluations run on a single
-    * core (1.17 s in-sweep; 0.30 s once spread — CoalesceFloorProbe
-    * r12 traced the gap to the coalescing floor). An explicit hash
+    * core (1.17 s in-sweep; 0.30 s once spread — NOTES r12 traced
+    * the gap to the coalescing floor). An explicit hash
     * repartition on `cell` declares the stage's real parallelism
     * need; both self-join sides inherit it, so the join adds no
     * further exchange. At scale the same layout is what the equi-join
@@ -450,7 +448,7 @@ object Ann {
   // ADC rank hit 5 517 (27.6 % of the corpus), past even a 20 %
   // shortlist. On these near-random embeddings the per-sub-space
   // quantization error sets the imposter count; k 16→256 drops the
-  // worst observed rank to the low percents (PqProbe, measured below).
+  // worst observed rank to the low percents (NOTES r18, measured below).
   private val PqK = 256
   private val PqShortlist = 100
 
@@ -548,35 +546,6 @@ object Ann {
       .agg(sum(col("p")).as("adc"))
   }
 
-  /** Probe surface for tools/PqProbe: the ADC rank of the exact top-1
-    * per query — the shortlist size needed for recall@1 at this SF. */
-  private[graft] def pqAdcRanks(spark: SparkSession, sf: String): DataFrame = {
-    val (books, codes) = pqIndex(spark, sf)
-    val queriesSub = pqFrame(spark, sf).filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("m"), col("sd").as("qd"))
-    val adc = adcScores(codes, books, queriesSub)
-      .withColumn("adc_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(desc("adc"), asc("vec_id"))))
-    val vecs = vecFrame(spark, sf)
-      .withColumn("nrm", sqrt(expr("graft_ddot(ed, ed)")))
-    val exact = vecs.select(col("vec_id").as("tid"), col("ed"), col("nrm"))
-      .crossJoin(broadcast(vecs.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("ed").as("qed"),
-          col("nrm").as("qnrm"))))
-      .filter(col("qid") =!= col("tid"))
-      .withColumn("sim",
-        round(expr("graft_ddot(qed, ed)") / (col("qnrm") * col("nrm")), 6))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(desc("sim"), asc("tid"))))
-      .filter(col("rn") === 1)
-    exact.select(col("qid"), col("tid"))
-      .join(adc, col("tid") === col("vec_id") && exact("qid") === adc("qid"))
-      .select(exact("qid"), col("tid"), col("adc_rank"))
-      .orderBy("qid")
-  }
-
   /** PQ-ADC top-1 with exact re-rank, scored through the serving
     * contract: for each query (vec_id < 5) the ADC score (sum of
     * per-sub-space table lookups — integer-quantized partials, so the
@@ -596,7 +565,7 @@ object Ann {
     val adc = adcScores(codes, books, queriesSub)
     // Shortlist dial = max(PqShortlist, n/16), derived from a window
     // count in the same pass (no extra action). Measured on this
-    // corpus (tools/PqProbe, 8-bit codebooks): the exact top-1's worst
+    // corpus (NOTES r18, 8-bit codebooks): the exact top-1's worst
     // ADC rank is 35 of 2,000 at sf0.1 and 26 of 20,000 at ×10 — the
     // rank PERCENTILE improves with n (fixed ADC noise, rising top-1
     // sim), so the fixed fraction holds margin upward: ≥2.8× at the

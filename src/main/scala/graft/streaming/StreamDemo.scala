@@ -35,18 +35,10 @@ object StreamDemo {
     * removes. Keyed by applicationId like the dim/edge checkpoints. */
   private val scratchRoots = new graft.FitOnce[(String, String, String), String]
 
-  /** Probe knob: bumping this forces FRESH stream roots (cold
-    * checkpoint + empty sink) for every later invocation in the same
-    * session — [[graft.tools.StreamColdProbe]] uses it to time
-    * full-backlog processing in a warm engine, the number checkpoint
-    * reuse removes from the bench. Production code never bumps it. */
-  private[graft] val rootEpoch = new java.util.concurrent.atomic.AtomicLong(0)
-
   private[graft] def streamRoot(spark: SparkSession, sf: String,
       query: String): java.nio.file.Path =
     java.nio.file.Paths.get(
-      scratchRoots((spark.sparkContext.applicationId + "#" + rootEpoch.get,
-          sf, query)) {
+      scratchRoots((spark.sparkContext.applicationId, sf, query)) {
         graft.Tables.scratchDir(s"graft_${query}_").toString
       })
 

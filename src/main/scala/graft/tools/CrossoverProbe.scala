@@ -172,10 +172,7 @@ object CrossoverProbe {
     * Heavy tables already on disk are kept as-is. */
   private[tools] def extendCorpus(factor: Int, names: Seq[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val xDir = java.nio.file.Paths.get("target", "crossover", s"x$factor")
       .toAbsolutePath.toString
@@ -231,15 +228,9 @@ object CrossoverProbe {
       .filter(_.nonEmpty).toSeq
     val outRoot = java.nio.file.Paths.get("target", "crossover")
     java.nio.file.Files.createDirectories(outRoot)
-    // The bench session config (Bench.scala) — the protocol under
-    // which the scored numbers are produced.
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        graft.Tables.scratchDir("graft_shuffle_").toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // The bench session — the protocol under which the scored
+    // numbers are produced.
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val xDir = outRoot.resolve(s"x$factor").toAbsolutePath.toString
@@ -296,7 +287,7 @@ object CrossoverProbe {
       .map(h => s""""mint_commit":"$h",""").getOrElse("")
     val out = s"""{$mint"base":"$base","factor":$factor,"x_dir":"$xDir",""" +
       s""""factor2":$factor2,"x2_dir":"$x2Dir",""" +
-      s""""protocol":"prepared count(), warm, min-of-3 (x1/xN) and min-of-5 (x2), local[32] bench config",""" +
+      s""""protocol":"prepared count(), warm, min-of-3 (x1/xN) and min-of-5 (x2), local[${graft.GraftSession.cpus}] bench config",""" +
       s""""calib_spark":[${graft.Bench.fmt3(calibPre)},${graft.Bench.fmt3(calibPost)}],""" +
       s""""spark_x1":${j(mins(t1), Shapes)},"spark_xN":${j(mins(tN), Shapes)},""" +
       s""""spark_x2":${j(mins(t2), shapes2)},""" +

@@ -348,14 +348,7 @@ object Fuzz {
   } + "\""
 
   def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-fuzz")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.builder().appName("graft-fuzz").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-inventory scale audit: time EVERY declared query on the base
   * corpus and on the CrossoverProbe ×N corpus (same prepared protocol
   * as the bench) and report per-query ratios, worst first. The sf0.1
@@ -24,13 +22,7 @@ object ScaleSweep {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val xDir = args.headOption.getOrElse("target/crossover/x10")
     val flagRatio = args.lift(1).map(_.toDouble).getOrElse(15.0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        graft.Tables.scratchDir("graft_shuffle_").toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
 
@@ -128,7 +120,7 @@ object ScaleSweep {
       }
     val outJson = s"""{$mint"factor":$factor,"x_dir":"$xDir",""" +
       s""""flag_ratio":$flagRatio,"flagged":$flaggedJson,""" +
-      s""""protocol":"prepared count(), warm+min-of-2 per corpus, local[32] bench config",""" +
+      s""""protocol":"prepared count(), warm+min-of-2 per corpus, local[${graft.GraftSession.cpus}] bench config",""" +
       s""""ratios":${jm(ratios)},"base_s":${jm(tBase)},"x_s":${jm(tX)}$x2Block}"""
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_SCALESWEEP_OUT", "scalesweep.json"))

@@ -55,8 +55,9 @@ class DeterminismSuite extends SparkTestBase {
     assertSameRows("13 shuffle partitions", alt)
   }
 
-  /** Bench exposes SPARK_GRAFT_AQE=false to price AQE's re-planning
-    * cost — that knob must be able to change TIMING only. Runtime
+  /** AQE is a Spark runtime conf (`spark.sql.adaptive.enabled`, on in
+    * every GraftSession) that a deployment may turn off to price its
+    * re-planning cost — doing so must change TIMING only. Runtime
     * re-planning (coalesced exchanges, switched join strategies) must
     * never reach row values or order. */
   test("results are AQE-invariant (the bench AQE knob changes timing only)") {

@@ -563,7 +563,7 @@ class PlanSuite extends SparkTestBase {
   }
 
   test("ev_sliding aggregates on a long key with no Expand or per-input-row timestamp work") {
-    // The r15 A/B win (SlidingProbe: window()'s struct-keyed Expand →
+    // The r15 A/B win (NOTES r15: window()'s struct-keyed Expand →
     // integer-µs explode, 0.187→0.152 s at sf0.1): the plan must keep
     // the hot path in primitive longs — no Expand node, no
     // struct-of-timestamps grouping key; the single timestamp
@@ -698,38 +698,39 @@ class PlanSuite extends SparkTestBase {
   }
 
   /** The r11 34.5 s sweep depends on the generated-class cache being
-    * sized to the 167-query workload in BOTH mains: dropping it from
-    * Bench silently re-opens the ~15 s janino-recompile regression,
-    * and a Bench/Verify skew would time a different engine config than
-    * is scored. `codegen.cache.maxEntries` is a STATIC conf (readable
+    * sized to the 167-query workload in BOTH mains: dropping it
+    * silently re-opens the ~15 s janino-recompile regression, and a
+    * Bench/Verify skew would time a different engine config than is
+    * scored. `codegen.cache.maxEntries` is a STATIC conf (readable
     * only at session build), so this pins the source of truth — the
-    * literal `.config(...)` call in each main — rather than a live
-    * session conf. */
+    * literal `.config(...)` call in GraftSession, which both mains
+    * build through without overriding it. */
   test("Bench and Verify both pin the same codegen cache size") {
     val key = "spark.sql.codegen.cache.maxEntries"
     val re = ("""\.config\("""" + java.util.regex.Pattern.quote(key) +
       """",\s*"(\d+)"\)""").r
-    def pinned(file: String): Option[String] = {
+    def source(file: String): String = {
       val p = java.nio.file.Paths.get("src", "main", "scala", "graft", file)
       assert(java.nio.file.Files.exists(p),
         s"$p not found — run tests from the repo root")
-      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      re.findFirstMatchIn(src).map(_.group(1))
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
     }
-    val bench = pinned("Bench.scala")
-    val verify = pinned("Verify.scala")
-    assert(bench.isDefined, s"Bench.scala no longer sets $key — " +
-      "the 167-query sweep will re-pay janino compilation on every timed pass")
-    assert(verify.isDefined, s"Verify.scala no longer sets $key — " +
-      "correctness would run a different engine config than the bench times")
-    assert(bench == verify,
-      s"Bench ($bench) and Verify ($verify) disagree on $key")
+    assert(re.findFirstMatchIn(source("GraftSession.scala")).isDefined,
+      s"GraftSession.scala no longer sets $key — " +
+        "the 167-query sweep will re-pay janino compilation on every timed pass")
+    for (file <- Seq("Bench.scala", "Verify.scala")) {
+      val src = source(file)
+      assert(src.contains("GraftSession.builder("),
+        s"$file no longer builds its session through GraftSession — " +
+          "correctness would run a different engine config than the bench times")
+      assert(!src.contains(key), s"$file overrides $key")
+    }
   }
 
   /** The IVF pair searches must declare their own parallelism: the
     * pair stage's cost is quadratic in cell size while its input
     * bytes are linear, so AQE's byte-based coalescing serializes it
-    * on small inputs (the r12 CoalesceFloorProbe finding — 1.17 s on
+    * on small inputs (the NOTES r12 finding — 1.17 s on
     * one core vs 0.30 s spread). The fix is an explicit hash
     * repartition on `cell` feeding BOTH self-join sides, which the
     * join then reuses — the plan must carry that exchange and must
